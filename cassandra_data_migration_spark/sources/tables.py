@@ -420,7 +420,8 @@ def scaled_shuffle_partitions(
     LogicalRDDs, so the quorum repartition hit the cap).  Any estimate
     at or beyond ``distrust_above`` (default 2⁵⁰ ≈ 1 PiB, an order of
     magnitude past the 100 TB design point; env
-    ``SPARK_GRAFT_STATS_DISTRUST``) is treated as UNKNOWN → return
+    ``SPARK_GRAFT_STATS_DISTRUST``, ignored unless it parses as an
+    int) is treated as UNKNOWN → return
     ``floor`` (defer to AQE/default parallelism) rather than
     manufacturing a million-task exchange from a number that carries
     no information."""
@@ -436,9 +437,12 @@ def scaled_shuffle_partitions(
     import math
     import os as _os
 
-    distrust_above = int(
-        _os.environ.get("SPARK_GRAFT_STATS_DISTRUST", str(1 << 50))
-    )
+    try:
+        distrust_above = int(
+            _os.environ.get("SPARK_GRAFT_STATS_DISTRUST", str(1 << 50))
+        )
+    except ValueError:  # a malformed value keeps the default guard
+        distrust_above = 1 << 50
     if est <= 0 or est >= distrust_above:
         return floor
     return max(floor, min(cap, math.ceil(est / bytes_per_task)))

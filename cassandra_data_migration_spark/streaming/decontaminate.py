@@ -17,7 +17,7 @@ xxhash64'd n-gram set (8 bytes/shingle) and the stream side probes
 hashed keys; exact strings are kept here to stay aligned with the
 batch operator and its DuckDB oracle.  Routing (clean → training
 sink, contaminated → quarantine with overlap counts) composes with
-``dual_write.foreach_batch_dual_write`` for the two-sink form.
+``dual_write.make_dual_writer`` for the two-sink form.
 """
 
 from __future__ import annotations

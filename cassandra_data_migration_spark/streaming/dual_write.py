@@ -3,8 +3,13 @@
 The proxy duplicates every client write to origin (sync — failures
 surface to the client) and target (async — failures only surface in
 metrics) (docs/05-zdm-approach.md:108-114, 392-396).  Spark-native:
-a Structured Streaming query whose ``foreachBatch`` writes each
-micro-batch to both sinks:
+a Structured Streaming query whose ``foreachBatch`` fans each
+persisted micro-batch out to both sinks at once.  Three Spark jobs run
+concurrently on the one cached batch: the origin write on the stream's
+own thread, the target write and the row count each on a
+``pyspark.InheritableThread``.  The batch function joins both threads
+before it returns, so both sinks have committed when the stream
+checkpoints the batch:
 
 - origin write failures RAISE → the batch retries/fails: exactly-once
   on the primary path via checkpointing + deterministic batch ids;
@@ -18,6 +23,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -33,6 +39,34 @@ class DualWriteMetrics:
     )
 
 
+class _Leg:
+    """``fn(*args)`` started on an ``InheritableThread`` that mirrors the
+    calling stream thread's Spark state.  The thread copies the
+    caller's local properties (the stream's job group and
+    ``sql.streaming.queryId``) at start, so stopping the query cancels
+    this leg's jobs too; a plain ``threading.Thread`` starts with none
+    of them.  It also makes ``session`` the thread's active session, as
+    the stream thread has it: without one, the leg's writes plan under
+    the default session's conf and cannot resolve data sources
+    registered on the stream's session.  After :meth:`join`, ``value``
+    or ``error`` holds the outcome."""
+
+    def __init__(self, session: SparkSession, fn, *args):
+        self.value = self.error = None
+        self._thread = InheritableThread(target=self._run, args=(session, fn, args))
+        self._thread.start()
+
+    def _run(self, session: SparkSession, fn, args) -> None:
+        try:
+            session._jvm.SparkSession.setActiveSession(session._jsparkSession)
+            self.value = fn(*args)
+        except BaseException as e:  # noqa: BLE001 — handed to the caller at join
+            self.error = e
+
+    def join(self) -> None:
+        self._thread.join()
+
+
 def make_dual_writer(
     origin_writer,
     target_writer,
@@ -40,30 +74,54 @@ def make_dual_writer(
 ):
     """Build the foreachBatch function.  ``origin_writer`` /
     ``target_writer`` are ``(DataFrame, batch_id) -> None`` sink
-    callables (parquet append, CQL connector write, ...)."""
+    callables (parquet append, CQL connector write, ...).
+
+    Each batch is persisted once and fanned out: the target write and
+    the row count start on their own threads, the origin write runs on
+    the calling (stream) thread, and the function joins both threads
+    before it unpersists and returns.  Counters change only on the
+    calling thread, after the joins.  Outcomes:
+
+    - origin fails → ``failed_on["origin"]`` and the origin's exception
+      is raised, after the target leg has finished and been metered;
+    - target fails → ``failed_on["target"]`` (``"both"`` when origin
+      failed too), never raised;
+    - the count fails → the batch fails with the count's exception; if
+      origin failed as well, origin's exception is raised and carries
+      the count's as a note.
+    """
     m = metrics if metrics is not None else DualWriteMetrics()
 
     def write_both(batch: DataFrame, batch_id: int) -> None:
         m.batches += 1
         batch = batch.persist()
         try:
-            n = batch.count()
-            origin_failed = False
+            count = _Leg(batch.sparkSession, batch.count)
+            target = _Leg(batch.sparkSession, target_writer, batch, batch_id)
+            origin_error = None
             try:
                 origin_writer(batch, batch_id)
-                m.rows_origin += n
-            except Exception:
-                origin_failed = True
-                m.failed_on["origin"] += 1
-                raise  # sync path: the client (stream) sees origin failures
-            finally:
-                try:
-                    target_writer(batch, batch_id)
-                    m.rows_target += n
-                except Exception:  # noqa: BLE001 — async path is metered only
-                    m.failed_on["both" if origin_failed else "target"] += 1
+            except BaseException as e:  # noqa: BLE001 — raised below, after the joins
+                origin_error = e
+            count.join()
+            target.join()
         finally:
             batch.unpersist()
+
+        if isinstance(target.error, Exception):  # async path is metered only
+            m.failed_on["both" if origin_error is not None else "target"] += 1
+        elif target.error is not None:
+            raise target.error  # an interrupt or exit, not a sink failure
+        elif count.error is None:
+            m.rows_target += count.value
+        if origin_error is not None:
+            m.failed_on["origin"] += 1
+            if count.error is not None:
+                origin_error.add_note(f"the batch's row count also failed: {count.error!r}")
+            raise origin_error  # sync path: the client (stream) sees origin failures
+        if count.error is not None:
+            raise count.error
+        m.rows_origin += count.value
 
     write_both.metrics = m  # type: ignore[attr-defined]
     return write_both

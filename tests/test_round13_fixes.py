@@ -41,6 +41,18 @@ def test_scaled_shuffle_partitions_distrusts_unknown_stats(spark):
     ), n_scan
 
 
+def test_scaled_shuffle_partitions_ignores_malformed_distrust_env(spark, monkeypatch):
+    from cassandra_data_migration_spark.sources.tables import (
+        scaled_shuffle_partitions,
+    )
+
+    # a bad env value must not crash planning: the 2**50 guard still
+    # applies, so unknown stats still fall back to the floor
+    monkeypatch.setenv("SPARK_GRAFT_STATS_DISTRUST", "abc")
+    local = spark.createDataFrame([(1, 10)], "k long, v long")
+    assert scaled_shuffle_partitions(local) == spark.sparkContext.defaultParallelism
+
+
 def test_quorum_on_local_frames_is_fast(spark):
     # the exact round-12 hang shape: quorum over createDataFrame
     # replicas must not manufacture a million-partition exchange

@@ -85,6 +85,86 @@ def test_dual_write_origin_failure_raises_and_meters(spark, tmp_path):
     assert m.rows_target == 5
 
 
+def test_dual_write_legs_inherit_stream_job_group(spark, tmp_path, mutation_source):
+    """Both legs run under the stream's job group and query id, so
+    stopping the query cancels the target leg's jobs too."""
+    src, schema = mutation_source
+    sc = spark.sparkContext
+    seen = {"origin": [], "target": []}
+
+    def recorder(side):
+        def write(batch, batch_id):
+            seen[side].append(
+                (sc.getLocalProperty("spark.jobGroup.id"),
+                 sc.getLocalProperty("sql.streaming.queryId"))
+            )
+        return write
+
+    writer = make_dual_writer(recorder("origin"), recorder("target"))
+    q = (
+        file_mutation_stream(spark, src, schema, max_files_per_trigger=1)
+        .writeStream.foreachBatch(writer)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert len(seen["origin"]) >= 2
+    assert seen["target"] == seen["origin"]
+    assert all(g is not None and qid == q.id for g, qid in seen["origin"])
+
+
+def test_dual_write_legs_overlap(spark):
+    """The origin leg cannot finish until the target leg has started:
+    only a concurrent fan-out passes.  The timeout guards a deadlock."""
+    import threading
+
+    target_started = threading.Event()
+
+    def origin(batch, batch_id):
+        if not target_started.wait(60):
+            raise AssertionError("target leg did not run alongside origin")
+
+    def target(batch, batch_id):
+        target_started.set()
+
+    m = DualWriteMetrics()
+    make_dual_writer(origin, target, m)(spark.range(7), 0)
+    assert m.rows_origin == 7 and m.rows_target == 7
+    assert m.failed_on == {"origin": 0, "target": 0, "both": 0}
+
+
+def test_dual_write_both_fail_raises_origin_error(spark):
+    class OriginDown(Exception):
+        pass
+
+    def dead_origin(batch, batch_id):
+        raise OriginDown("origin down")
+
+    def dead_target(batch, batch_id):
+        raise IOError("target down")
+
+    m = DualWriteMetrics()
+    writer = make_dual_writer(dead_origin, dead_target, m)
+    with pytest.raises(OriginDown):
+        writer(spark.range(3), 0)
+    assert m.failed_on == {"origin": 1, "target": 0, "both": 1}
+    assert m.rows_origin == 0 and m.rows_target == 0
+
+
+def test_dual_write_count_failure_fails_the_batch(spark):
+    # the writers never touch the rows; only the count evaluates the
+    # failing filter, and its error must reach the caller
+    bad = spark.range(3).filter(F.raise_error(F.lit("count boom")).isNull())
+    m = DualWriteMetrics()
+    writer = make_dual_writer(lambda b, i: None, lambda b, i: None, m)
+    with pytest.raises(Exception, match="count boom"):
+        writer(bad, 0)
+    assert m.rows_origin == 0 and m.rows_target == 0
+    assert m.failed_on == {"origin": 0, "target": 0, "both": 0}
+
+
 def test_read_router_modes(spark):
     origin = spark.range(10).withColumn("src", F.lit("o"))
     target = spark.range(8).withColumn("src", F.lit("t"))
