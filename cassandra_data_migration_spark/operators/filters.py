@@ -72,23 +72,22 @@ def point_lookup(df: DataFrame, pk: dict) -> DataFrame:
     return df.filter(cond)
 
 
-def guardrail_split(
-    df: DataFrame,
+def guardrail_predicate(
     col_caps_kb: dict[str, float] | None = None,
     row_cap_kb: float | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """P7: guardrail size predicate — flag rows whose column/row size
-    exceeds caps (spark.cdm.guardrail.colSizeInKB / rowSizeInKB,
-    docs/04-cdm-approach.md:379-387).  Returns (pass, violations).
+) -> Column:
+    """P7: guardrail size predicate — true for rows whose column/row
+    size exceeds caps (spark.cdm.guardrail.colSizeInKB / rowSizeInKB,
+    docs/04-cdm-approach.md:379-387).
 
-    Sizes are computed with built-in ``length``/``octet_length`` so the
-    check stays inside codegen; the split is two filters over one
-    cached plan, not a Python loop.
-    """
+    Sizes are computed with built-in ``octet_length`` so the check
+    stays inside codegen.  A NULL cell has size 0, so the predicate is
+    never NULL: every row lands on exactly one side of the split."""
     size_terms = []
     cond = F.lit(False)
     for c, cap in (col_caps_kb or {}).items():
-        col_kb = F.octet_length(F.col(c).cast("string")) / 1024.0
+        size = F.coalesce(F.octet_length(F.col(c).cast("string")), F.lit(0))
+        col_kb = size / 1024.0
         size_terms.append(col_kb)
         cond = cond | (col_kb > F.lit(cap))
     if row_cap_kb is not None and size_terms:
@@ -96,15 +95,16 @@ def guardrail_split(
         for t in size_terms[1:]:
             row_kb = row_kb + t
         cond = cond | (row_kb > F.lit(row_cap_kb))
+    return cond
+
+
+def guardrail_split(
+    df: DataFrame,
+    col_caps_kb: dict[str, float] | None = None,
+    row_cap_kb: float | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """P7 (split form): (pass, violations) under
+    :func:`guardrail_predicate` — two filters over one plan, not a
+    Python loop."""
+    cond = guardrail_predicate(col_caps_kb, row_cap_kb)
     return df.filter(~cond), df.filter(cond)
-
-
-def guardrail_flag(
-    df: DataFrame, col: str, cap_kb: float, flag_col: str = "guardrail_violation"
-) -> DataFrame:
-    """P7 (flag form): annotate rows with a violation bit instead of
-    splitting — used when the violations feed a report."""
-    return df.withColumn(
-        flag_col,
-        (F.octet_length(F.col(col).cast("string")) / 1024.0 > F.lit(cap_kb)),
-    )

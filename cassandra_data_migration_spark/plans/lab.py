@@ -64,13 +64,14 @@ def lab_migration_report(
     workdir = workdir or tempfile.mkdtemp(prefix="lab_migration_")
     # Phase 1: the four migrations (four write jobs — side effects).
     # They are INDEPENDENT jobs on disjoint inputs/outputs, and each
-    # one is a chain of small actions (pipeline violation count, row-
-    # size sample, the write itself) whose stage tails leave most
+    # one is small (the schema read, then the write job, which also
+    # carries every count) with a stage tail that leaves most
     # executors idle — so they run from a small thread pool and the
     # scheduler back-fills one job's tail with the next job's tasks
-    # (guide §2.6 "overlap independent jobs").  Measured at sf0.1:
-    # serial 1.97-3.42 s for the four, overlapped ~1 s (interleaved
-    # A/B below, x0.72 on the whole query).  Results are unchanged:
+    # (guide §2.6 "overlap independent jobs").  Measured at sf0.1,
+    # when each migration also ran a row-size sample: serial
+    # 1.97-3.42 s for the four, overlapped ~1 s (interleaved A/B
+    # below, x0.72 on the whole query).  Results are unchanged:
     # each migration writes its own directory and the report plan is
     # built strictly after every future resolves.
     # Phase 2: all four tables' validations as ONE unioned lazy plan,

@@ -16,7 +16,17 @@ CDM is driven by cdm.properties + --conf overrides
   zero shuffles;
 - the write is partitioned by the partition key so a CQL-like sink
   batches per partition (dsbulk PARTITION_KEY mode,
-  docs/03-dse-tooling.md:185-189).
+  docs/03-dse-tooling.md:185-189);
+- every count rides the one job that already runs (the write, or the
+  dry run's ``count()``): an Observation after the source-side filters
+  counts the rows read and the guardrail violations, and one on the
+  write counts the rows written.  A plain migration is one Spark job
+  plus the schema read — no probe, no re-scan.
+
+CDM's batchSize auto rule (docs/04-cdm-approach.md:460-462) is sized
+ahead of the run by plans/sizing.migration_sizing_plan from parquet
+footers; the parquet sink here does not batch, so ``migrate`` only
+carries an explicitly configured ``perfops.batchSize`` through.
 """
 
 from __future__ import annotations
@@ -25,7 +35,7 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from cassandra_data_migration_spark.functions import metadata as meta
@@ -70,12 +80,9 @@ class MigrationConfig:
     num_parts: int | None = None  # repartition target for the write
     rate_limit_rows_per_sec: int | None = None  # perfops.ratelimit.target
     batch_partition_cols: list[str] = field(default_factory=list)
-    # spark.cdm.perfops.batchSize (cdm.properties:28): None → CDM's
-    # auto rule, 1 for rows >20KB or PK==partition key, else 5
-    # (docs/04-cdm-approach.md:460-462)
+    # spark.cdm.perfops.batchSize (cdm.properties:28); the auto rule
+    # for an unset value is plans/sizing.migration_sizing_plan's
     batch_size: int | None = None
-    large_row_kb: float = 20.0
-    pk_is_partition_key: bool = False
     # spark.cdm.schema.ttlwritetime.calc.useCollections
     # (docs/04-cdm-approach.md:830): include collection/UDT cells in
     # the row-level max-TTL/max-writetime collapse
@@ -94,12 +101,19 @@ class MigrationConfig:
 
 @dataclass
 class MigrationResult:
+    """Counts of one run.  ``rows_read`` is what CDM's CQL SELECT would
+    return: rows left after the source-side filters (token range,
+    writetime, whereCondition, and the resume clip), before the
+    guardrail.  So ``rows_read == guardrail_violations + rows_written``
+    for a real run; a dry run writes nothing and reports the same
+    ``rows_read`` and ``guardrail_violations``."""
+
     rows_read: int
     rows_written: int
     guardrail_violations: int
     elapsed_sec: float
     dry_run: bool
-    batch_size: int = 5  # the effective (possibly auto-derived) value
+    batch_size: int | None = None  # the configured perfops.batchSize
     run_id: str | None = None  # set when trackRun is enabled
 
     @property
@@ -107,10 +121,14 @@ class MigrationResult:
         return self.rows_written / self.elapsed_sec if self.elapsed_sec else 0.0
 
 
-def build_feature_pipeline(df: DataFrame, cfg: MigrationConfig) -> tuple[DataFrame, DataFrame | None]:
+def build_feature_pipeline(
+    df: DataFrame, cfg: MigrationConfig
+) -> tuple[DataFrame, Observation]:
     """Steps 3-4 of the lifecycle (SURVEY.md §3.1): compose the feature
-    stages.  Returns (migrating_rows, guardrail_violations_or_None).
-    Pure plan construction — nothing executes here."""
+    stages.  Returns (migrating_rows, counts): the first action over
+    the rows fills the Observation ``counts`` with ``rows_read`` and
+    ``guardrail_violations`` (see :class:`MigrationResult`).  Pure
+    plan construction — nothing executes here."""
     # per-cell metadata collapse first: row-level max writetime/TTL,
     # honoring the useCollections switch (docs/04-cdm-approach.md:830)
     if WRITETIME_COL not in df.columns and any(
@@ -138,19 +156,23 @@ def build_feature_pipeline(df: DataFrame, cfg: MigrationConfig) -> tuple[DataFra
     if cfg.where_condition:
         df = df.filter(cfg.where_condition)
 
-    violations = None
+    violation = F.lit(False)  # folded away when no guardrail is set
     if cfg.guardrail_cols and (
         cfg.guardrail_col_kb is not None or cfg.guardrail_row_kb is not None
     ):
-        caps = {
-            c: (cfg.guardrail_col_kb
-                if cfg.guardrail_col_kb is not None
-                else float("inf"))
-            for c in cfg.guardrail_cols
-        }
-        df, violations = flt.guardrail_split(
-            df, caps, row_cap_kb=cfg.guardrail_row_kb
+        cap = cfg.guardrail_col_kb
+        violation = flt.guardrail_predicate(
+            {c: float("inf") if cap is None else cap for c in cfg.guardrail_cols},
+            row_cap_kb=cfg.guardrail_row_kb,
         )
+    # The counts sit above the source-side filters, so those still
+    # push down to the scan; count_if is 0, not NULL, over no rows.
+    counts = Observation()
+    df = df.observe(
+        counts,
+        F.count(F.lit(1)).alias("rows_read"),
+        F.count_if(violation).alias("guardrail_violations"),
+    ).filter(~violation)
 
     for name, value in cfg.constant_columns.items():
         df = df.withColumn(name, F.lit(value))
@@ -160,7 +182,7 @@ def build_feature_pipeline(df: DataFrame, cfg: MigrationConfig) -> tuple[DataFra
         df = df.withColumn(
             WRITETIME_COL, F.col(WRITETIME_COL) + F.lit(cfg.writetime_increment)
         )
-    return df, violations
+    return df, counts
 
 
 def migrate(spark: SparkSession, cfg: MigrationConfig) -> MigrationResult:
@@ -170,11 +192,6 @@ def migrate(spark: SparkSession, cfg: MigrationConfig) -> MigrationResult:
     (same dataflow; a Cassandra connector swaps in at the
     ``spark.read``/``write`` boundary without touching the plan).
     """
-    from cassandra_data_migration_spark.plans.throttle import (
-        effective_batch_size,
-        estimate_avg_row_kb,
-    )
-
     t0 = time.perf_counter()
     src = spark.read.parquet(cfg.origin_path)
     tracker = run_id = None
@@ -198,29 +215,15 @@ def migrate(spark: SparkSession, cfg: MigrationConfig) -> MigrationResult:
         src = tracker.filter_pending(
             src, cfg.track_key_col, cfg.previous_run_id
         )
-    rows_read_df = src.observe("migrate_read", F.count(F.lit(1)).alias("rows"))
-    out, violations = build_feature_pipeline(rows_read_df, cfg)
-
-    n_violations = violations.count() if violations is not None else 0
-
-    # batchSize resolution (docs/04-cdm-approach.md:460-462): explicit
-    # config wins; otherwise CDM's auto rule from a bounded row-size
-    # sample (>20 KB rows or PK==partition key → 1, else 5)
-    if cfg.batch_size is not None:
-        batch = cfg.batch_size
-    else:
-        batch = effective_batch_size(
-            estimate_avg_row_kb(src),
-            large_row_kb=cfg.large_row_kb,
-            pk_is_partition_key=cfg.pk_is_partition_key,
-        )
+    out, read_obs = build_feature_pipeline(src, cfg)
 
     if cfg.dry_run:
         # T4: plan + count, no write (docs/03-dse-tooling.md:231-240)
-        n = out.count()
+        out.count()
+        read = read_obs.get
         return MigrationResult(
-            n, 0, n_violations, time.perf_counter() - t0, True, batch,
-            run_id=run_id,
+            read["rows_read"], 0, read["guardrail_violations"],
+            time.perf_counter() - t0, True, cfg.batch_size, run_id=run_id,
         )
 
     writer = out
@@ -252,8 +255,6 @@ def migrate(spark: SparkSession, cfg: MigrationConfig) -> MigrationResult:
     # observation as conditional aggregates when the bucket count is
     # modest (the 32-bucket default), so the tracked path costs zero
     # extra scans too.
-    from pyspark.sql import Observation
-
     obs = Observation()
     metrics = [F.count(F.lit(1)).alias("rows")]
     observe_buckets = (
@@ -306,7 +307,8 @@ def migrate(spark: SparkSession, cfg: MigrationConfig) -> MigrationResult:
             for b, n in tracker.completed_bucket_rows(cfg.previous_run_id):
                 if b not in recorded:
                     tracker.record_bucket(run_id, b, "PASSED", rows=n)
+    read = read_obs.get
     return MigrationResult(
-        n_written, n_written, n_violations, time.perf_counter() - t0, False, batch,
-        run_id=run_id
+        read["rows_read"], n_written, read["guardrail_violations"],
+        time.perf_counter() - t0, False, cfg.batch_size, run_id=run_id,
     )

@@ -6,10 +6,11 @@ before running it:
 
 - ``numParts``: "default 5K, ideal is usually table-size/10MB"
 - ``batchSize``: "default 5, use 1 for large rows (>20KB) or when
-  PK=partition key" (the same rule plans/throttle.effective_batch_size
-  applies at write time)
+  PK=partition key" (this module is the rule's only home;
+  plans/migrate only carries a configured batchSize through)
 - ``fetchSizeInRows``: "default 1K, reduce for tables with large rows
-  (>100KB)"
+  (>100KB)" (plans/throttle.effective_fetch_size applies the same
+  constants to a probed row size for sources/tables.paged_fetch)
 - ``ratelimit``: "default 20000" rows/s — which also bounds the ETA a
   run will report (docs/04-cdm-approach.md:540 "Estimated completion")
 

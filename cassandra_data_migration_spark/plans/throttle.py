@@ -1,63 +1,28 @@
-"""Throughput / reliability operators (SURVEY.md §2.10 T1-T4).
+"""Throughput operators (SURVEY.md §2.10 T1-T2) as declarative plans.
 
 The reference caps throughput per worker (perfops.ratelimit.* default
-20k ops/s per side, docs/04-cdm-approach.md:463,492-493,637), batches
-writes (batchSize, cdm.properties:28), and aborts on an error budget
-(errorLimit, cdm.properties:38; dsbulk maxErrors
-docs/03-dse-tooling.md:217-228).
-
-Rate limiting is inherently imperative — Catalyst has no notion of
-wall-clock — so it's the one place we drop to ``mapPartitions``-style
-per-partition logic.  The per-partition budget is global_limit /
-num_partitions, mirroring the reference's per-worker division
+20k ops/s per side, docs/04-cdm-approach.md:463,492-493,637) and
+batches writes (batchSize, cdm.properties:28).  Both are expressed here
+as pure functions of the row — an admission schedule and a write-batch
+assignment — so they are reproducible across engines and
+oracle-checkable.  The per-worker budget is global_limit / num_workers,
+mirroring the reference's per-worker division
 (docs/04-cdm-approach.md:637).
+
+CDM's sizing rules (batchSize, fetchSizeInRows, numParts) live in
+plans/sizing.py; :func:`effective_fetch_size` applies its fetch
+constants to a probed row size for the driver-paced fetch.
 """
 
 from __future__ import annotations
 
-import time
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
 
-
-@dataclass
-class ErrorBudgetExceeded(Exception):
-    errors: int
-    limit: int
-
-    def __str__(self) -> str:  # pragma: no cover
-        return f"error budget exceeded: {self.errors} > {self.limit}"
-
-
-def rate_limited_foreach_partition(
-    df: DataFrame,
-    process_row,
-    rows_per_sec_global: int,
-    chunk: int = 100,
-) -> None:
-    """T1: token-bucket rate limiter inside foreachPartition.
-
-    Each partition gets ``rows_per_sec_global / num_partitions``;
-    pacing is checked every ``chunk`` rows (per-row sleeps would melt
-    the GIL at 20k ops/s).
-    """
-    num_parts = max(df.rdd.getNumPartitions(), 1)
-    per_part = max(rows_per_sec_global / num_parts, 1.0)
-
-    def run(it):
-        start = time.monotonic()
-        n = 0
-        for row in it:
-            process_row(row)
-            n += 1
-            if n % chunk == 0:
-                expected = n / per_part
-                elapsed = time.monotonic() - start
-                if elapsed < expected:
-                    time.sleep(expected - elapsed)
-
-    df.foreachPartition(run)
+from cassandra_data_migration_spark.plans.sizing import (
+    DEFAULT_FETCH,
+    HUGE_ROW_BYTES,
+    REDUCED_FETCH,
+)
 
 
 def throttle_schedule(
@@ -67,18 +32,18 @@ def throttle_schedule(
     num_workers: int = 4,
     salt: str = "throttle",
 ) -> DataFrame:
-    """T1, declarative form: the admission schedule the token-bucket
-    limiter executes.  Each row is assigned a worker (hash of its PK —
+    """T1: the admission schedule a token-bucket limiter would
+    execute.  Each row is assigned a worker (hash of its PK —
     the reference's per-worker rate split, docs/04-cdm-approach.md:637)
     and a send second = rank within its worker DIV the per-worker
     budget (``rows_per_sec_global / num_workers``).
 
     Everything is a pure function of the row (md5 draws + integer
     DIV), so the schedule is reproducible across engines and
-    partitionings — unlike the wall-clock limiter, it can be
-    oracle-checked.  Physical plan: one shuffle on the worker id, then
-    a per-worker rank — exactly the work distribution the real
-    limiter induces, computed ahead of time."""
+    partitionings, and it can be oracle-checked.  Physical plan: one
+    shuffle on the worker id, then a per-worker rank — the work
+    distribution a wall-clock limiter induces, computed ahead of
+    time."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -99,42 +64,10 @@ def throttle_schedule(
     )
 
 
-def with_error_budget(
-    df: DataFrame,
-    process_row,
-    error_limit: int = 100,
-    on_error=None,
-):
-    """T3: row-level try/except with a Spark-accumulator error counter;
-    the job aborts once the global count crosses ``error_limit``
-    (cdm.properties:38).  Returns the accumulator's final value."""
-    sc = df.sparkSession.sparkContext
-    errors = sc.accumulator(0)
-
-    def run(it):
-        local = 0
-        for row in it:
-            try:
-                process_row(row)
-            except Exception as e:  # noqa: BLE001 — budget semantics
-                errors.add(1)
-                local += 1
-                if on_error is not None:
-                    on_error(row, e)
-                if errors.value is not None and local > error_limit:
-                    # local short-circuit; global check happens after
-                    raise ErrorBudgetExceeded(local, error_limit)
-
-    df.foreachPartition(run)
-    if errors.value > error_limit:
-        raise ErrorBudgetExceeded(errors.value, error_limit)
-    return errors.value
-
-
 def estimate_avg_row_kb(df: DataFrame, sample_rows: int = 1000) -> float:
     """Average serialized row size (KB) from a bounded sample — the
-    input to CDM's batchSize heuristic.  JSON encoding is the proxy
-    (close enough to CQL wire size to trip the same >20 KB threshold);
+    input to :func:`effective_fetch_size`.  JSON encoding is the proxy
+    (close enough to CQL wire size to trip the same >100 KB threshold);
     ``limit`` keeps the probe O(sample) on a 100 TB table."""
     from pyspark.sql import functions as F
 
@@ -150,37 +83,15 @@ def estimate_avg_row_kb(df: DataFrame, sample_rows: int = 1000) -> float:
     return float(row["avg_bytes"] or 0.0) / 1024.0
 
 
-def effective_batch_size(
-    avg_row_kb: float,
-    batch_size: int = 5,
-    large_row_kb: float = 20.0,
-    pk_is_partition_key: bool = False,
-) -> int:
-    """CDM's batchSize rule (docs/04-cdm-approach.md:460-462): default
-    5, but use 1 for large rows (>20 KB) or when the primary key IS the
-    partition key (batching buys nothing — every row is its own
-    partition, so a multi-row batch spans partitions and the
-    coordinator splits it anyway)."""
-    if pk_is_partition_key or avg_row_kb > large_row_kb:
-        return 1
-    return batch_size
-
-
-def effective_fetch_size(
-    avg_row_kb: float,
-    fetch_size: int = 1000,
-    huge_row_kb: float = 100.0,
-    reduced_fetch: int = 100,
-) -> int:
-    """CDM's fetchSizeInRows rule, the read-side mirror of
-    :func:`effective_batch_size` (docs/04-cdm-approach.md:461-462):
+def effective_fetch_size(avg_row_kb: float) -> int:
+    """CDM's fetchSizeInRows rule (docs/04-cdm-approach.md:461-462):
     default 1,000 rows per page, reduced for tables with very large
-    rows (>100 KB) so a single page can't blow the fetcher's memory.
-    The same constants drive plans/sizing.migration_sizing_plan's
+    rows (>100 KB) so a single page can't blow the fetcher's memory —
+    the constants of plans/sizing.migration_sizing_plan's
     ``fetch_size_rows`` column."""
-    if avg_row_kb > huge_row_kb:
-        return reduced_fetch
-    return fetch_size
+    if avg_row_kb * 1024 > HUGE_ROW_BYTES:
+        return REDUCED_FETCH
+    return DEFAULT_FETCH
 
 
 def assign_write_batches(
@@ -190,7 +101,7 @@ def assign_write_batches(
     batch_size: int = 5,
     salt: str = "batch",
 ) -> DataFrame:
-    """T2, declarative form: group rows into write batches of
+    """T2: group rows into write batches of
     ``batch_size`` within their partition-key group — the unit a
     CQL-like sink sends as one UNLOGGED BATCH (cdm.properties:28).
 
@@ -215,34 +126,3 @@ def assign_write_batches(
         )
         .drop("_rank0")
     )
-
-
-def batched_write(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str] | None = None,
-    max_records_per_file: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """T2: write batching for file sinks — partition-key co-location
-    (dsbulk PARTITION_KEY mode, docs/03-dse-tooling.md:185-189) plus a
-    per-file record cap (the batchSize analogue for files)."""
-    w = df
-    if partition_cols:
-        w = df.repartition(*partition_cols).sortWithinPartitions(*partition_cols)
-    writer = w.write.mode(mode)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(path)
-
-
-def dry_run(df: DataFrame) -> dict:
-    """T4: plan + count without writing (dsbulk --dryRun,
-    docs/03-dse-tooling.md:231-240)."""
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return {"rows": df.count(), "plan": buf.getvalue()}

@@ -142,8 +142,8 @@ def paged_fetch(
     ``page_size=None`` applies CDM's auto rule: probe the average row
     size from a bounded sample and reduce the page below the default
     1,000 rows for very large rows (>100 KB) —
-    plans/throttle.effective_fetch_size, the read-side mirror of the
-    batchSize auto-reduction.
+    plans/throttle.effective_fetch_size, with plans/sizing.py's
+    fetchSizeInRows constants.
 
     DRIVER-PACED BY DESIGN: this is the single-threaded COPY analogue
     for the extraction edge (row-oriented sinks).  It must never sit

@@ -155,14 +155,8 @@ def test_writetime_collapse_use_collections_flag(spark):
 def test_batch_size_heuristic_and_assignment(spark):
     from cassandra_data_migration_spark.plans.throttle import (
         assign_write_batches,
-        effective_batch_size,
         estimate_avg_row_kb,
     )
-
-    # CDM rule: default 5; 1 for >20KB rows; 1 when PK==partition key
-    assert effective_batch_size(0.5) == 5
-    assert effective_batch_size(25.0) == 1
-    assert effective_batch_size(0.5, pk_is_partition_key=True) == 1
 
     small = spark.createDataFrame([(1, "x" * 10)], "id int, v string")
     big = spark.createDataFrame([(1, "x" * 40_000)], "id int, v string")
@@ -183,22 +177,15 @@ def test_batch_size_heuristic_and_assignment(spark):
 
 
 def test_migrate_auto_batch_size(spark, keyspace, tmp_path):
-    # auto rule resolves from a bounded row-size sample
+    # the auto rule lives in plans/sizing (test_sizing.py); migrate
+    # reports the configured perfops.batchSize, or None
     src = str(tmp_path / "src")
     keyspace["orders"].write.mode("overwrite").parquet(src)
     res = migrate(
         spark,
         MigrationConfig(origin_path=src, target_path="", dry_run=True),
     )
-    assert res.batch_size == 5
-    res1 = migrate(
-        spark,
-        MigrationConfig(
-            origin_path=src, target_path="", dry_run=True,
-            pk_is_partition_key=True,
-        ),
-    )
-    assert res1.batch_size == 1
+    assert res.batch_size is None
     res2 = migrate(
         spark,
         MigrationConfig(
@@ -268,3 +255,107 @@ def test_throttle_schedule_honors_budgets_and_is_stable(spark):
     )
     assert sched.exceptAll(again).count() == 0
     sched.unpersist()
+
+
+# -- counts ride the migration's own job ---------------------------------------
+
+
+def _guarded_orders(spark, tmp_path):
+    """An origin with a whereCondition and a guardrail that both bite:
+    status 'x' is filtered at the source, long notes are rejected."""
+    src = str(tmp_path / "guarded_src")
+    spark.range(300).selectExpr(
+        "id",
+        "CASE WHEN id % 10 = 0 THEN 'x' ELSE 'ok' END AS status",
+        "repeat('n', CAST(id % 7 * 300 AS INT)) AS note",
+    ).write.parquet(src)
+    return MigrationConfig(
+        origin_path=src,
+        target_path=str(tmp_path / "guarded_tgt"),
+        where_condition="status <> 'x'",
+        guardrail_cols=["note"],
+        guardrail_col_kb=1.0,
+    )
+
+
+def test_guardrail_keeps_rows_with_null_columns(spark, tmp_path):
+    from cassandra_data_migration_spark.operators.filters import guardrail_split
+
+    src = str(tmp_path / "src")
+    df = spark.createDataFrame(
+        [(1, "a"), (2, None), (3, "x" * 5000)], "id int, note string"
+    )
+    df.write.parquet(src)
+    ok, bad = guardrail_split(df, {"note": 1.0})
+    assert sorted(r.id for r in ok.collect()) == [1, 2]
+    assert [r.id for r in bad.collect()] == [3]
+
+    cfg = MigrationConfig(
+        origin_path=src,
+        target_path=str(tmp_path / "tgt"),
+        guardrail_cols=["note"],
+        guardrail_col_kb=1.0,
+    )
+    res = migrate(spark, cfg)
+    written = spark.read.parquet(cfg.target_path)
+    assert sorted(r.id for r in written.collect()) == [1, 2]
+    assert (res.rows_read, res.rows_written, res.guardrail_violations) == (
+        3, 2, 1
+    )
+
+
+def test_migrate_runs_schema_read_and_write_only(spark, tmp_path):
+    cfg = _guarded_orders(spark, tmp_path)
+    sc = spark.sparkContext
+    group = "test-migrate-jobs"
+    sc.setJobGroup(group, "migrate jobs")
+    try:
+        migrate(spark, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
+def test_rows_read_splits_into_rejected_and_written(spark, tmp_path):
+    cfg = _guarded_orders(spark, tmp_path)
+    res = migrate(spark, cfg)
+    origin = spark.read.parquet(cfg.origin_path)
+    read = origin.filter(cfg.where_condition)
+    assert res.rows_read == read.count() < origin.count()
+    assert res.guardrail_violations == read.filter("length(note) > 1024").count() > 0
+    assert res.rows_read == res.guardrail_violations + res.rows_written
+    assert spark.read.parquet(cfg.target_path).count() == res.rows_written
+
+    cfg.dry_run = True
+    dry = migrate(spark, cfg)
+    assert (dry.rows_read, dry.rows_written, dry.guardrail_violations) == (
+        res.rows_read, 0, res.guardrail_violations
+    )
+
+
+def test_migrate_empty_origin_counts_zero(spark, tmp_path):
+    src = str(tmp_path / "empty")
+    spark.createDataFrame([], "id int, note string").write.parquet(src)
+    for dry_run in (False, True):
+        res = migrate(
+            spark,
+            MigrationConfig(
+                origin_path=src,
+                target_path=str(tmp_path / "tgt"),
+                guardrail_cols=["note"],
+                guardrail_col_kb=1.0,
+                dry_run=dry_run,
+            ),
+        )
+        assert (res.rows_read, res.rows_written, res.guardrail_violations) == (
+            0, 0, 0
+        )
+
+
+def test_where_condition_reaches_the_scan(spark, tmp_path):
+    from cassandra_data_migration_spark.plans.migrate import build_feature_pipeline
+
+    cfg = _guarded_orders(spark, tmp_path)
+    out, _ = build_feature_pipeline(spark.read.parquet(cfg.origin_path), cfg)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Not(EqualTo(status,x))" in plan
