@@ -151,8 +151,10 @@ def main(argv: list[str] | None = None) -> int:
             print(json.dumps({"plan": [r.asDict() for r in plan.collect()]}))
             return 0
         if args.cmd == "guardrail":
+            from pyspark.sql import functions as F
+
             from cassandra_data_migration_spark.operators.filters import (
-                guardrail_split,
+                guardrail_predicate,
             )
 
             caps = {}
@@ -160,13 +162,22 @@ def main(argv: list[str] | None = None) -> int:
                 if pair.strip():
                     c, cap = pair.split("=")
                     caps[c.strip()] = float(cap)
-            df = spark.read.parquet(args.origin)
-            ok, bad = guardrail_split(df, caps or None, args.row_cap_kb)
-            n_bad = bad.count()
+            # one scan counts both numbers
+            counts = (
+                spark.read.parquet(args.origin)
+                .agg(
+                    F.count(F.lit(1)).alias("rows"),
+                    F.count_if(
+                        guardrail_predicate(caps or None, args.row_cap_kb)
+                    ).alias("bad"),
+                )
+                .first()
+            )
+            n_bad = counts["bad"]
             print(
                 json.dumps(
                     {
-                        "rows_scanned": df.count(),
+                        "rows_scanned": counts["rows"],
                         "violations": n_bad,
                         "clean": n_bad == 0,
                     }

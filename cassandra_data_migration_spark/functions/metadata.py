@@ -29,14 +29,6 @@ from pyspark.sql.types import ArrayType, MapType
 from cassandra_data_migration_spark.schema import TTL_COL, WRITETIME_COL
 
 
-def attach_constant_metadata(
-    df: DataFrame, writetime_us: int, ttl_s: int | None = None
-) -> DataFrame:
-    """Stamp uniform writetime/TTL — what an INSERT at time T does."""
-    df = df.withColumn(WRITETIME_COL, F.lit(writetime_us).cast("long"))
-    return df.withColumn(TTL_COL, F.lit(ttl_s).cast("int"))
-
-
 def attach_derived_writetime(df: DataFrame, ts_col: str) -> DataFrame:
     """Derive row writetime from an event-time column (µs since epoch),
     the natural mapping for the parquet fixtures."""

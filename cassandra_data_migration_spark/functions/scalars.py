@@ -10,34 +10,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def gen_uuid() -> Column:
-    """F1: uuid() (lab/scripts/generate_data.py:41).  Random; for
-    reproducible ids use generate._uuid_from."""
-    return F.expr("uuid()")
-
-
-def now_ts() -> Column:
-    """F2: toTimestamp(now())."""
-    return F.current_timestamp()
-
-
-def days_ago(n: int) -> Column:
-    """F3: now() - timedelta(days=n) (generate_data.py:46)."""
-    return F.current_timestamp() - F.expr(f"INTERVAL {n} DAYS")
-
-
-def derive_date(ts_col: str) -> Column:
-    """F3: date from timestamp (generate_data.py:143-146)."""
-    return F.to_date(F.col(ts_col))
-
-
-def username_email(first: Column, last: Column, i: Column) -> tuple[Column, Column]:
-    """F4: f"{first.lower()}.{last.lower()}{i}" + email
-    (generate_data.py:44-45)."""
-    username = F.concat(F.lower(first), F.lit("."), F.lower(last), i.cast("string"))
-    return username, F.concat(username, F.lit("@example.com"))
-
-
 def like_prefix(col: str, prefix: str) -> Column:
     """F5: LIKE 'prefix%' (lab/exercises/05-zdm-migration.md:665-666)."""
     return F.col(col).like(prefix + "%")
@@ -70,8 +42,3 @@ def explode_tokens(df: DataFrame, text_col: str, out: str = "token") -> DataFram
         *[c for c in df.columns if c != text_col],
         F.explode(F.split(F.col(text_col), " ")).alias(out),
     )
-
-
-def constant_column(df: DataFrame, name: str, value) -> Column:
-    """F11: constant-column feature (docs/04-cdm-approach.md:465)."""
-    return F.lit(value).alias(name)

@@ -12,27 +12,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def table_count(df: DataFrame) -> DataFrame:
-    """A1: COUNT(*) — the universal validation primitive
-    (lab/scripts/validate_migration.py:28-29)."""
-    return df.agg(F.count(F.lit(1)).alias("row_count"))
-
-
 def grouped_count(df: DataFrame, *keys: str) -> DataFrame:
     """A3: grouped count, e.g. rows per status
     (lab/exercises/05-zdm-migration.md:140-148)."""
     return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt"))
-
-
-def count_diff(origin_count: int, target_count: int) -> dict:
-    """A2: count diff pass/fail (lab/scripts/validate_migration.py:34-39)."""
-    diff = abs(origin_count - target_count)
-    return {
-        "origin_count": origin_count,
-        "target_count": target_count,
-        "difference": diff,
-        "status": "PASS" if diff == 0 else "FAIL",
-    }
 
 
 def pricing_summary(lineitem: DataFrame, ship_cutoff: str = "1998-09-02") -> DataFrame:
@@ -181,22 +164,6 @@ def observe_progress(df: DataFrame, name: str = "migration_progress"):
     """A9: migration progress counters (docs/04-cdm-approach.md:536-544)
     via the ``observe`` API — metrics ride the job, no second scan."""
     return df.observe(name, F.count(F.lit(1)).alias("rows_processed"))
-
-
-def summary_stats(df: DataFrame, col: str) -> DataFrame:
-    """A5-style latency aggregates: total / avg / rate over span."""
-    return df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum(col), 4).alias("total"),
-        F.round(F.avg(col), 4).alias("avg"),
-        F.round(F.min(col), 4).alias("min"),
-        F.round(F.max(col), 4).alias("max"),
-    )
-
-
-def conditional_sum(df: DataFrame, cond: Column, alias: str) -> DataFrame:
-    """`sum(when(cond,1))` building block used by traffic summaries."""
-    return df.agg(F.sum(F.when(cond, 1).otherwise(0)).alias(alias))
 
 
 def sketch_profile(

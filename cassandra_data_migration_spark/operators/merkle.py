@@ -74,21 +74,6 @@ def portable_digest_cols(df: DataFrame, cols: list[str]) -> list[Column]:
     return out
 
 
-def portable_digest_sql(df: DataFrame, cols: list[str]) -> list[str]:
-    """DuckDB expressions matching :func:`portable_digest_cols`
-    column-for-column."""
-    out: list[str] = []
-    for c in cols:
-        dt = dict(df.dtypes)[c]
-        if dt == "double":
-            out.append(f"CAST(CAST(FLOOR({c} * 100) AS BIGINT) AS VARCHAR)")
-        elif dt.startswith("timestamp"):
-            out.append(f"strftime({c}, '%Y-%m-%d %H:%M:%S.%f')")
-        else:
-            out.append(f"CAST({c} AS VARCHAR)")
-    return out
-
-
 # canonical row-equality encoding: unit-separator join (never appears
 # in fixture/typical data, unlike '|') of NULL-sentineled columns, then
 # md5 — two rows differing only in WHICH nullable column is NULL, or

@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cassandra_data_migration_spark.functions.hashing import md5_draw
@@ -55,25 +55,6 @@ def vnode_ring(
     ]
     entries.sort()
     return entries
-
-
-def token_owner(
-    ring: list[tuple[int, int]], key_token: Column
-) -> Column:
-    """Owning node for a token: the successor vnode on the ring
-    (smallest vnode token ≥ key token, wrapping to the ring's first
-    vnode).  Pure scan-side array expressions over the ring literals.
-
-    Column-level convenience for ALREADY-MATERIALIZED cheap token
-    columns only: the lambda re-evaluates ``key_token`` once per ring
-    slot (HOFs skip codegen CSE), so never pass an expensive
-    expression (md5/conv) here — the report functions below use the
-    broadcast range join instead."""
-    tokens = F.array(*[F.lit(t) for t, _ in ring])
-    nodes = F.array(*[F.lit(n) for _, n in ring])
-    succ = F.array_min(F.filter(tokens, lambda t: t >= key_token))
-    wrapped = F.coalesce(succ, F.lit(ring[0][0]))
-    return F.element_at(nodes, F.array_position(tokens, wrapped).cast("int"))
 
 
 def _slot_ranges(ring: list[tuple[int, int]]) -> list[tuple[int | None, int, int]]:

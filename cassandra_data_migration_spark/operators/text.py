@@ -1313,13 +1313,6 @@ def html_strip_sql(expr: str) -> str:
     return f"trim(regexp_replace({out}, '\\s+', ' ', 'g'))"
 
 
-def extract_html_text(
-    df: DataFrame, html_col: str = "html", out: str = "text"
-) -> DataFrame:
-    """DataFrame form of :func:`html_to_text`."""
-    return df.withColumn(out, html_to_text(html_col))
-
-
 def span_corrupt(
     df: DataFrame,
     density: float = 0.15,

@@ -78,7 +78,6 @@ class MigrationConfig:
     writetime_increment: int = 0
     # spark.cdm.perfops.*
     num_parts: int | None = None  # repartition target for the write
-    rate_limit_rows_per_sec: int | None = None  # perfops.ratelimit.target
     batch_partition_cols: list[str] = field(default_factory=list)
     # spark.cdm.perfops.batchSize (cdm.properties:28); the auto rule
     # for an unset value is plans/sizing.migration_sizing_plan's
@@ -252,20 +251,14 @@ def migrate(spark: SparkSession, cfg: MigrationConfig) -> MigrationResult:
     # Observation — re-reading the target to count would scan the
     # entire written output a second time (at 100 TB, that doubles the
     # job's I/O).  Per-bucket completion counts piggyback on the same
-    # observation as conditional aggregates when the bucket count is
-    # modest (the 32-bucket default), so the tracked path costs zero
-    # extra scans too.
+    # observation as conditional aggregates (RunTracker's 32 buckets),
+    # so the tracked path costs zero extra scans too.
     obs = Observation()
     metrics = [F.count(F.lit(1)).alias("rows")]
-    observe_buckets = (
-        tracker is not None
-        and run_id is not None
-        and tracker.num_buckets <= 64
-    )
-    if observe_buckets:
+    if tracker is not None:
         bucket = F.pmod(F.col(cfg.track_key_col), F.lit(tracker.num_buckets))
         metrics += [
-            F.sum(F.when(bucket == b, 1).otherwise(0)).alias(f"b{b}")
+            F.count_if(bucket == b).alias(f"b{b}")
             for b in range(tracker.num_buckets)
         ]
     writer = writer.observe(obs, *metrics)
@@ -274,28 +267,14 @@ def migrate(spark: SparkSession, cfg: MigrationConfig) -> MigrationResult:
     )
     observed = obs.get
     n_written = observed["rows"]
-    if tracker is not None and run_id is not None:
+    if tracker is not None:
         # per-bucket completion records (cdm_run_details analogue).
         # On resume the observation covers THIS run's buckets only —
         # previously completed buckets already hold their records
         # under the prior run id.
-        if observe_buckets:
-            counts = [
-                (b, observed[f"b{b}"]) for b in range(tracker.num_buckets)
-            ]
-        else:  # many buckets: one aggregation over the written rows
-            written = spark.read.parquet(cfg.target_path)
-            bucket = F.pmod(
-                F.col(cfg.track_key_col), F.lit(tracker.num_buckets)
-            )
-            counts = [
-                (int(r["_b"]), r["_n"])
-                for r in written.groupBy(bucket.alias("_b"))
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .collect()
-            ]
         recorded = set()
-        for b, n in counts:
+        for b in range(tracker.num_buckets):
+            n = observed[f"b{b}"]
             if n:
                 tracker.record_bucket(run_id, b, "PASSED", rows=n)
                 recorded.add(b)

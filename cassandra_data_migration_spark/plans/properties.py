@@ -15,6 +15,7 @@ in at the read/write boundary on a real cluster.
 from __future__ import annotations
 
 import os
+import warnings
 
 from cassandra_data_migration_spark.plans.migrate import MigrationConfig
 
@@ -58,14 +59,25 @@ def config_from_properties(
     """Map the spark.cdm.* key surface onto :class:`MigrationConfig`.
 
     Keys honored (reference file line refs in MigrationConfig):
-    perfops.{numParts,batchSize,ratelimit.target}, schema.origin.
+    perfops.{numParts,batchSize}, schema.origin.
     {keyspaceTable,column.names,column.names.to.exclude}, filter.
     cassandra.{partition.min,partition.max,whereCondition}, feature.
     writetime.filter.{min,max}, feature.{ttl,writetime}.enabled,
     guardrail.colSizeInKB, transform.custom.writetime.incrementBy,
     schema.ttlwritetime.calc.useCollections.
+
+    ``perfops.ratelimit.target`` is not applied on the migrate path
+    (the parquet sink has no throttle), so setting it warns instead of
+    loading silently; the connector sink takes it as its own argument
+    (``CassandraTableSource.write(rate_limit_rows_per_sec=...)``).
     """
     p = "spark.cdm."
+    if props.get(p + "perfops.ratelimit.target"):
+        warnings.warn(
+            f"{p}perfops.ratelimit.target is not applied by migrate(); "
+            "the run is not rate limited",
+            stacklevel=2,
+        )
     exclude = _get_list(props, p + "schema.origin.column.names.to.exclude")
     # feature toggles: disabling TTL/writetime preservation drops the
     # metadata columns from the migrated set (cdm.properties:20-21)
@@ -109,7 +121,6 @@ def config_from_properties(
         )
         or 0,
         num_parts=_get_int(props, p + "perfops.numParts"),
-        rate_limit_rows_per_sec=_get_int(props, p + "perfops.ratelimit.target"),
         batch_size=_get_int(props, p + "perfops.batchSize"),
         ttlwritetime_use_collections=_get_bool(
             props, p + "schema.ttlwritetime.calc.useCollections", False

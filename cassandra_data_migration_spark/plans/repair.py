@@ -40,17 +40,25 @@ slice — where every divergence, by construction, lives.
 Origin wins on every divergence mode: missing rows are copied,
 mismatched rows replaced, and target-only rows (extras) DELETED —
 leaving any of the three unrepaired would let the post-validation
-claim convergence over a still-divergent table.
+claim convergence over a still-divergent table.  So every scoped key
+origin holds ends up with origin's row and no other key survives: the
+repaired slice IS the origin side of the classification join, taken
+from that join rather than rebuilt from its bad keys.  Revalidation
+stays a full-outer join of the scoped origin against that view, so a
+key origin holds twice (two rows cannot both win) or a NULL key
+(which joins nothing) still reads as unconverged.
 
 Cost shape: the leaf diff runs once per side over the full table
 (unavoidable — digests must cover everything) and its ≤leaves flagged
 buckets are collected to the driver (O(leaves) rows, bounded by
-construction); the row legs read only flagged ranges; pre-repair
-metrics are ONE full-outer join of the two scoped slices;
-post-validation is one more join of the scoped origin against the
-repaired view.  Size ``fanout**depth`` well above the expected
-divergent-key count — SCALE_PROBE_r06.json shows 64 leaves scoping
-half the table under 50 corruptions while 4096 leaves scope 1.2%.
+construction); the row legs read only flagged ranges; ONE full-outer
+join of the two scoped slices classifies every key and feeds both the
+pre-repair counts and the repaired view; post-validation is one more
+join of the scoped origin against that view.  Pre and post count with
+plans/validate.diff_counts, the rule validation uses.  Size
+``fanout**depth`` well above the expected divergent-key count —
+SCALE_PROBE_r06.json shows 64 leaves scoping half the table under 50
+corruptions while 4096 leaves scope 1.2%.
 """
 
 from __future__ import annotations
@@ -66,6 +74,7 @@ from cassandra_data_migration_spark.operators.merkle import (
     portable_digest_cols,
     token_bucket,
 )
+from cassandra_data_migration_spark.plans.validate import diff_counts
 
 METRICS = (
     "divergent_leaves",
@@ -234,62 +243,36 @@ def merkle_scoped_repair(
 
     # ONE full-outer join classifies every scoped key: missing (origin
     # only), extra (target only), mismatched (both, different content)
-    j = o_scoped.select("_k", F.col("_canon").alias("_oc")).join(
-        t_scoped.select("_k", F.col("_canon").alias("_tc")),
-        "_k",
-        "full_outer",
+    oc = o_scoped.select("_k", F.col("_canon").alias("_oc"))
+    j = oc.join(
+        t_scoped.select("_k", F.col("_canon").alias("_tc")), "_k", "full_outer"
     )
-    is_missing = F.col("_tc").isNull() & F.col("_oc").isNotNull()
-    is_extra = F.col("_oc").isNull() & F.col("_tc").isNotNull()
-    is_mismatch = (
-        F.col("_oc").isNotNull()
-        & F.col("_tc").isNotNull()
-        & (F.col("_oc") != F.col("_tc"))
-    )
+    diff = diff_counts("_oc", "_tc")
     pre = j.agg(
-        F.count("_oc").cast("long").alias("scoped_origin_rows"),
-        F.sum(is_missing.cast("long")).alias("missing_repaired"),
-        F.sum(is_mismatch.cast("long")).alias("mismatched_repaired"),
-        F.sum(is_extra.cast("long")).alias("extra_removed"),
+        F.count("_oc").alias("scoped_origin_rows"),
+        diff["missing"].alias("missing_repaired"),
+        diff["mismatched"].alias("mismatched_repaired"),
+        diff["extra"].alias("extra_removed"),
     )
 
-    # origin wins: replace mismatched, insert missing, DELETE extras.
-    # Repaired view and revalidation are scoped too — unflagged leaves
-    # are convergent by the matching digests (module docstring).
-    bad_keys = j.filter(is_missing | is_mismatch | is_extra).select("_k")
-    copy_keys = j.filter(is_missing | is_mismatch).select("_k")
-    repaired = (
-        t_scoped.join(bad_keys, "_k", "left_anti")
-        .select("_k", "_canon")
-        .unionByName(
-            o_scoped.join(copy_keys, "_k", "left_semi").select("_k", "_canon")
-        )
+    # origin wins: every scoped key origin holds takes origin's row and
+    # every target-only key is deleted, so the repaired slice is the
+    # origin side of ``j``.  Revalidation is scoped too — unflagged
+    # leaves are convergent by the matching digests (module docstring)
+    # — and stays a full-outer join so a duplicated or NULL origin key
+    # still reads as unconverged.
+    repaired = j.filter(F.col("_oc").isNotNull()).select(
+        "_k", F.col("_oc").alias("_tc")
     )
-    pj = o_scoped.select("_k", F.col("_canon").alias("_oc")).join(
-        repaired.select("_k", F.col("_canon").alias("_tc")),
-        "_k",
-        "full_outer",
-    )
-    post = pj.agg(
-        F.sum((F.col("_tc").isNull() & F.col("_oc").isNotNull()).cast("long"))
-        .alias("post_missing"),
-        F.sum(
-            (
-                F.col("_oc").isNotNull()
-                & F.col("_tc").isNotNull()
-                & (F.col("_oc") != F.col("_tc"))
-            ).cast("long")
-        ).alias("post_mismatched"),
-        F.sum((F.col("_oc").isNull() & F.col("_tc").isNotNull()).cast("long"))
-        .alias("post_extra"),
+    post = oc.join(repaired, "_k", "full_outer").agg(
+        *[c.alias(f"post_{name}") for name, c in diff.items()]
     )
 
     row = pre.crossJoin(post).withColumn(
         "divergent_leaves", F.lit(len(flagged)).cast("long")
     )
-    stack_args = ", ".join(
-        f"'{m}', coalesce(CAST({m} AS BIGINT), 0)" for m in METRICS
-    )
+    # every metric is already a non-NULL bigint (count / count_if)
+    stack_args = ", ".join(f"'{m}', {m}" for m in METRICS)
     return row.select(
         F.expr(f"stack({len(METRICS)}, {stack_args}) AS (metric, value)")
     )

@@ -14,13 +14,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cassandra_data_migration_spark.operators.joins import (
-    per_bucket_count_compare,
-    reconcile,
-)
+from cassandra_data_migration_spark.operators.joins import reconcile
 
 
 @dataclass
@@ -43,6 +40,20 @@ class TableValidation:
     @property
     def status(self) -> str:
         return "PASS" if self.passed else "FAIL"
+
+
+def diff_counts(origin_hash: str, target_hash: str) -> dict[str, Column]:
+    """The one missing / extra / mismatched rule, as aggregates over a
+    full-outer join of (key, origin hash) and (key, target hash): a
+    NULL hash marks the side that lacks the row.  Each count is a
+    bigint, 0 (not NULL) over no rows.  Validation and the Merkle
+    repair's pre/post reports (plans/repair.py) all count with it."""
+    o, t = F.col(origin_hash), F.col(target_hash)
+    return {
+        "missing": F.count_if(o.isNotNull() & t.isNull()),
+        "extra": F.count_if(o.isNull() & t.isNotNull()),
+        "mismatched": F.count_if(o != t),
+    }
 
 
 def validate_table_plan(
@@ -70,16 +81,7 @@ def validate_table_plan(
     return o.join(t, on=pk, how="full_outer").agg(
         F.count("_oh").alias("o_cnt"),
         F.count("_th").alias("t_cnt"),
-        F.sum(F.when(F.col("_th").isNull(), 1).otherwise(0)).alias("missing"),
-        F.sum(F.when(F.col("_oh").isNull(), 1).otherwise(0)).alias("extra"),
-        F.sum(
-            F.when(
-                F.col("_oh").isNotNull()
-                & F.col("_th").isNotNull()
-                & (F.col("_oh") != F.col("_th")),
-                1,
-            ).otherwise(0)
-        ).alias("mismatched"),
+        *[c.alias(name) for name, c in diff_counts("_oh", "_th").items()],
     )
 
 
@@ -105,9 +107,9 @@ def validate_table(
         table=table,
         origin_count=row["o_cnt"],
         target_count=row["t_cnt"],
-        missing=row["missing"] or 0,
-        mismatched=row["mismatched"] or 0,
-        extra_in_target=row["extra"] or 0,
+        missing=row["missing"],
+        mismatched=row["mismatched"],
+        extra_in_target=row["extra"],
     )
 
 
@@ -206,12 +208,3 @@ def schema_diff(origin: DataFrame, target: DataFrame) -> DataFrame:
     only_o = o.exceptAll(t).withColumn("side", F.lit("origin_only"))
     only_t = t.exceptAll(o).withColumn("side", F.lit("target_only"))
     return only_o.unionByName(only_t)
-
-
-def bucket_drill_down(
-    origin: DataFrame, target: DataFrame, key_col: str, num_buckets: int = 32
-) -> DataFrame:
-    """J5 wrapper: which token buckets disagree — the 'narrow the diff
-    before re-scanning' tool for huge tables
-    (docs/07-challenges-risks.md:300-325)."""
-    return per_bucket_count_compare(origin, target, key_col, num_buckets)

@@ -108,14 +108,3 @@ PARTITION_KEYS: dict[str, list[str]] = {
     "products": ["product_id"],
     "user_activity": ["user_id", "activity_date"],
 }
-
-
-def with_metadata(schema: StructType) -> StructType:
-    """Schema + (writetime, ttl) metadata columns."""
-    return StructType(
-        list(schema.fields)
-        + [
-            StructField(WRITETIME_COL, LongType()),
-            StructField(TTL_COL, IntegerType()),
-        ]
-    )

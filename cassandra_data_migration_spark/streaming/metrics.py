@@ -190,16 +190,6 @@ def node_down_alerts_sql(
     """
 
 
-def observe_stream(df: DataFrame, name: str = "stream_metrics") -> DataFrame:
-    """A9/Z5: ride-along metrics via observe(); read from
-    StreamingQueryListener / query.lastProgress.observedMetrics."""
-    return df.observe(
-        name,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)).alias("errors"),
-    )
-
-
 def _window_seconds(window: str) -> float:
     qty, unit = window.split()
     mult = {

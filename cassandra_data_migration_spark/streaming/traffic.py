@@ -9,23 +9,11 @@ scheme as generate.py, so a given ops log is reproducible.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 READ_OPS = ["select_limit", "select_by_status", "count_rows"]  # :83-101
 WRITE_OPS = ["insert_user", "update_last_login"]  # :104-137
-
-
-def rate_traffic_stream(
-    spark: SparkSession, rows_per_second: int = 2
-) -> DataFrame:
-    """The live stream: timestamp+value monotonically from the rate
-    source (the proxy's request feed stand-in)."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
 
 
 def assign_ops(

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from cassandra_data_migration_spark.__main__ import main
 from cassandra_data_migration_spark.plans.properties import (
     config_from_properties,
@@ -26,14 +28,27 @@ def test_parse_properties_comments_and_whitespace():
 def test_reference_cdm_properties_drop_in():
     with open(REFERENCE_PROPERTIES, encoding="utf-8") as fh:
         props = parse_properties(fh.read())
-    cfg = config_from_properties(props, "origin", "target")
+    # the lab's file sets ratelimit.target, which migrate() does not
+    # apply: it still loads, with a warning
+    with pytest.warns(UserWarning, match="ratelimit.target"):
+        cfg = config_from_properties(props, "origin", "target")
     # the exact values the lab ships (lab/cdm-config/cdm.properties)
     assert cfg.num_parts == 4
     assert cfg.batch_size == 5
-    assert cfg.rate_limit_rows_per_sec == 5000
     # ttl/writetime preservation enabled → metadata columns retained
     assert "_ttl" not in cfg.exclude_columns
     assert "_writetime" not in cfg.exclude_columns
+
+
+def test_ratelimit_target_warns_instead_of_being_ignored():
+    props = {
+        "spark.cdm.perfops.ratelimit.target": "5000",
+        "spark.cdm.perfops.numParts": "4",
+    }
+    with pytest.warns(UserWarning, match="perfops.ratelimit.target"):
+        cfg = config_from_properties(props, "origin", "target")
+    assert cfg.num_parts == 4
+    assert not hasattr(cfg, "rate_limit_rows_per_sec")
 
 
 def test_feature_toggles_exclude_metadata_columns():

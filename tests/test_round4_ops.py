@@ -633,6 +633,35 @@ def test_cli_guardrail_subcommand(spark):
     assert out["violations"] == 0 and rc == 0
 
 
+def test_cli_guardrail_scans_once(spark):
+    """Both numbers come from one aggregate over one scan: the call's
+    job group holds the schema read and that aggregate, not two
+    separate counts."""
+    import contextlib
+    import io
+    import json as _json
+
+    from cassandra_data_migration_spark.__main__ import main
+
+    sc = spark.sparkContext
+    sc.setJobGroup("cli-guardrail", "one guardrail call")
+    try:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            rc = main([
+                "guardrail",
+                "--origin", "/root/testdata/sf0.001/documents.parquet",
+                "--col-caps", "text=0.4",
+            ])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    out = _json.loads(buf.getvalue().strip().splitlines()[-1])
+    assert out["rows_scanned"] == 500 and out["violations"] > 0 and rc == 1
+    # the schema read plus the aggregate's scan and final stage
+    jobs = sc.statusTracker().getJobIdsForGroup("cli-guardrail")
+    assert len(jobs) <= 3, sorted(jobs)
+
+
 def test_migrate_track_run_resume_via_properties(spark, tmp_path):
     """trackRun end to end through the properties surface: run 1
     records per-bucket completion; run 2 with previousRunId scans

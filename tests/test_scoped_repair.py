@@ -236,3 +236,68 @@ def test_default_path_unchanged_without_readers(spark):
     assert rep["missing_repaired"] == 1
     assert rep["mismatched_repaired"] == 1
     assert rep["post_missing"] == rep["post_mismatched"] == rep["post_extra"] == 0
+
+
+def _repair_jobs(spark, origin, target, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "one merkle_scoped_repair call")
+    try:
+        rep = _metrics(merkle_scoped_repair(origin, target, "k", ["a", "b"]))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return rep, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repair_classifies_each_scoped_key_once(spark):
+    """The repaired view is the classification join's origin side, so
+    no anti/semi-join re-reads the scoped slices: the call runs the
+    leaf diff, the flagged collect and ONE report job chain."""
+    origin, target = _mk_tables(spark, n=4000)
+    _repair_jobs(spark, origin, target, "repair-warm")
+    rep, jobs = _repair_jobs(spark, origin, target, "repair-once")
+    assert rep["missing_repaired"] == rep["mismatched_repaired"] == 1
+    assert rep["post_missing"] == rep["post_mismatched"] == rep["post_extra"] == 0
+    # leaf diff + flagged collect + the pre/post report; one more
+    # join leg over the scoped slices shows up as extra jobs here
+    assert jobs <= 11, jobs
+
+
+def _keyed(spark, rows):
+    return spark.createDataFrame(rows, "k long, a string, b long")
+
+
+def _base_rows(n=400):
+    return [(i, str(i * 7), i % 13) for i in range(n)]
+
+
+def test_duplicated_origin_key_is_not_claimed_converged(spark):
+    """Two origin rows under one key cannot both win: the scoped
+    post-validation still sees the key's other row as a mismatch."""
+    base = _base_rows()
+    origin = _keyed(spark, base + [(5, "dup", 0)])
+    target = _keyed(spark, base)
+    rep = _metrics(merkle_scoped_repair(origin, target, "k", ["a", "b"]))
+    assert rep["mismatched_repaired"] == 1
+    assert rep["post_mismatched"] > 0
+
+
+def test_null_origin_key_stays_missing(spark):
+    """A NULL key joins nothing, so an origin row keyed NULL is never
+    repaired into place and post_missing says so."""
+    base = _base_rows()
+    origin = _keyed(spark, base + [(None, "n", 1)])
+    target = _keyed(spark, base)
+    rep = _metrics(merkle_scoped_repair(origin, target, "k", ["a", "b"]))
+    assert rep["missing_repaired"] == 1
+    assert rep["post_missing"] >= 1
+
+
+def test_null_target_only_key_is_removed(spark):
+    """Origin wins: a target-only row is deleted even when its key is
+    NULL, which no key join can match."""
+    base = _base_rows()
+    origin = _keyed(spark, base)
+    target = _keyed(spark, base + [(None, "n", 1)])
+    rep = _metrics(merkle_scoped_repair(origin, target, "k", ["a", "b"]))
+    assert rep["extra_removed"] == 1
+    assert rep["post_missing"] == rep["post_mismatched"] == rep["post_extra"] == 0
