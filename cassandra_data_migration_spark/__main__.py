@@ -79,6 +79,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from cassandra_data_migration_spark.session import get_spark
+    from cassandra_data_migration_spark.sources.files import read_parquet
 
     # reuse a live session when called programmatically (tests, REPL);
     # only stop a session this invocation itself created
@@ -164,7 +165,7 @@ def main(argv: list[str] | None = None) -> int:
                     caps[c.strip()] = float(cap)
             # one scan counts both numbers
             counts = (
-                spark.read.parquet(args.origin)
+                read_parquet(spark, args.origin)
                 .agg(
                     F.count(F.lit(1)).alias("rows"),
                     F.count_if(
@@ -190,8 +191,8 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         res = validate_table(
-            spark.read.parquet(args.origin),
-            spark.read.parquet(args.target),
+            read_parquet(spark, args.origin),
+            read_parquet(spark, args.target),
             pk=[c.strip() for c in args.pk.split(",") if c.strip()],
             table=args.table,
         )

@@ -59,6 +59,7 @@ def lab_migration_report(
         sample_validate,
         validate_table_plan,
     )
+    from cassandra_data_migration_spark.sources.files import read_parquet
     from cassandra_data_migration_spark.sources.tables import load_table
 
     workdir = workdir or tempfile.mkdtemp(prefix="lab_migration_")
@@ -105,7 +106,7 @@ def lab_migration_report(
             table=lab_name,
         )
         origin = load_table(spark, sf_dir, table)
-        target = spark.read.parquet(cfg.target_path)
+        target = read_parquet(spark, cfg.target_path)
         compare_cols = [c for c in origin.columns if c not in pk]
         counts = validate_table_plan(
             origin, target, pk, compare_cols=compare_cols

@@ -20,8 +20,10 @@ CDM is driven by cdm.properties + --conf overrides
 - every count rides the one job that already runs (the write, or the
   dry run's ``count()``): an Observation after the source-side filters
   counts the rows read and the guardrail violations, and one on the
-  write counts the rows written.  A plain migration is one Spark job
-  plus the schema read — no probe, no re-scan.
+  write counts the rows written.  A plain migration of a table Spark
+  wrote is ONE Spark job: the origin's schema comes from the footer
+  Spark wrote (sources/files.read_parquet), so no inference job runs,
+  and there is no probe and no re-scan.
 
 CDM's batchSize auto rule (docs/04-cdm-approach.md:460-462) is sized
 ahead of the run by plans/sizing.migration_sizing_plan from parquet
@@ -41,6 +43,7 @@ from pyspark.sql import functions as F
 from cassandra_data_migration_spark.functions import metadata as meta
 from cassandra_data_migration_spark.operators import filters as flt
 from cassandra_data_migration_spark.schema import TTL_COL, WRITETIME_COL
+from cassandra_data_migration_spark.sources.files import read_parquet
 
 Transform = Callable[[DataFrame], DataFrame]
 
@@ -66,7 +69,9 @@ class MigrationConfig:
     writetime_max: int | None = None
     # spark.cdm.filter.cassandra.whereCondition (SQL fragment)
     where_condition: str | None = None
-    # spark.cdm.guardrail.colSizeInKB / rowSizeInKB
+    # spark.cdm.guardrail.colSizeInKB / rowSizeInKB; guardrail_cols
+    # (engine extension guardrail.columns) narrows the capped columns,
+    # empty caps every migrated column
     guardrail_col_kb: float | None = None
     guardrail_row_kb: float | None = None
     guardrail_cols: list[str] = field(default_factory=list)
@@ -156,12 +161,17 @@ def build_feature_pipeline(
         df = df.filter(cfg.where_condition)
 
     violation = F.lit(False)  # folded away when no guardrail is set
-    if cfg.guardrail_cols and (
-        cfg.guardrail_col_kb is not None or cfg.guardrail_row_kb is not None
-    ):
+    if cfg.guardrail_col_kb is not None or cfg.guardrail_row_kb is not None:
+        # CDM's caps name no columns (docs/04-cdm-approach.md:379-387):
+        # without a column list, every column the migration carries is
+        # capped — the set after include/exclude, before constant
+        # columns and custom transforms
         cap = cfg.guardrail_col_kb
         violation = flt.guardrail_predicate(
-            {c: float("inf") if cap is None else cap for c in cfg.guardrail_cols},
+            {
+                c: float("inf") if cap is None else cap
+                for c in cfg.guardrail_cols or df.columns
+            },
             row_cap_kb=cfg.guardrail_row_kb,
         )
     # The counts sit above the source-side filters, so those still
@@ -192,7 +202,7 @@ def migrate(spark: SparkSession, cfg: MigrationConfig) -> MigrationResult:
     ``spark.read``/``write`` boundary without touching the plan).
     """
     t0 = time.perf_counter()
-    src = spark.read.parquet(cfg.origin_path)
+    src = read_parquet(spark, cfg.origin_path)
     tracker = run_id = None
     if cfg.track_run and cfg.track_key_col:
         from cassandra_data_migration_spark.plans.tracker import RunTracker

@@ -63,7 +63,8 @@ def config_from_properties(
     {keyspaceTable,column.names,column.names.to.exclude}, filter.
     cassandra.{partition.min,partition.max,whereCondition}, feature.
     writetime.filter.{min,max}, feature.{ttl,writetime}.enabled,
-    guardrail.colSizeInKB, transform.custom.writetime.incrementBy,
+    guardrail.{colSizeInKB,rowSizeInKB,columns} (no columns caps
+    every migrated column), transform.custom.writetime.incrementBy,
     schema.ttlwritetime.calc.useCollections.
 
     ``perfops.ratelimit.target`` is not applied on the migrate path

@@ -35,6 +35,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cassandra_data_migration_spark.sources.files import read_parquet
+
 MB10 = 10 * 1024 * 1024
 LARGE_ROW_BYTES = 20 * 1024  # batchSize -> 1 above this
 HUGE_ROW_BYTES = 100 * 1024  # fetchSizeInRows -> reduced above this
@@ -49,7 +51,7 @@ def _footer_totals(spark: SparkSession, table: str, path: str) -> DataFrame:
     read distributed."""
     import pandas as pd
 
-    files = spark.read.parquet(path).inputFiles()
+    files = read_parquet(spark, path).inputFiles()
     fdf = spark.createDataFrame(
         [(f,) for f in files], "file string"
     ).repartition(max(1, math.ceil(len(files) / 64)))

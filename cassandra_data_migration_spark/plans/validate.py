@@ -73,12 +73,17 @@ def validate_table_plan(
     ).select(
         *pk, "_oh"
     )
+    # the target's keys are renamed so the NULL-safe condition resolves
+    # by name even when both sides come from one DataFrame; a NULL key
+    # held by both sides is then one matched row, not missing + extra
+    tk = [f"_tk{i}" for i in range(len(pk))]
     t = with_row_hash(
         target.select(*pk, *value_cols), value_cols, "_th", algo="xxhash"
     ).select(
-        *pk, "_th"
+        *[F.col(k).alias(r) for k, r in zip(pk, tk)], "_th"
     )
-    return o.join(t, on=pk, how="full_outer").agg(
+    on = [F.col(k).eqNullSafe(F.col(r)) for k, r in zip(pk, tk)]
+    return o.join(t, on=on, how="full_outer").agg(
         F.count("_oh").alias("o_cnt"),
         F.count("_th").alias("t_cnt"),
         *[c.alias(name) for name, c in diff_counts("_oh", "_th").items()],

@@ -294,6 +294,90 @@ def parquet_evolved_read(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.option("mergeSchema", "true").parquet(path)
 
 
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job.
+
+    Spark infers a parquet directory's schema with a one-task job that
+    reads the first data file's footer (``mergeSchema`` off) and
+    prefers the Spark schema JSON it finds under
+    :data:`SPARK_SCHEMA_KEY`.  On a 4-vCPU host that job takes ~75 ms
+    per table warm, while the same footer read on the driver with
+    pyarrow takes under 1 ms, so a table Spark wrote is read with its
+    own schema given.
+
+    Every input where the driver-side read could differ from Spark's
+    inference is left to Spark (:func:`_spark_footer_schema` returns
+    None): a non-local or relative path, a glob, partition or other
+    subdirectories, ``_metadata``/``_common_metadata`` summaries,
+    ``mergeSchema`` on, or a first file without the key (pyarrow or
+    DuckDB output).  Each call reads the footer afresh, so a rewritten
+    table is never read with a stale schema."""
+    schema = _spark_footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def _spark_footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema Spark's inference would take for ``path``, from the
+    footer of the first data file in Spark's own order, or None when
+    that cannot be decided on the driver."""
+    import json
+    from urllib.parse import urlsplit
+
+    import pyarrow.parquet as pq
+
+    url = urlsplit(path)
+    if url.scheme not in ("", "file") or url.netloc:
+        return None
+    local = url.path if url.scheme else path
+    # Spark resolves a relative path against the JVM's working
+    # directory, which the Python process may since have left
+    if not os.path.isabs(local) or any(ch in local for ch in "*?[]{}\\"):
+        return None
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
+        return None
+    # (name, path, is_dir) of the leaves Spark lists: a named file is
+    # its own listing and passes the same name rules
+    if os.path.isfile(local):
+        listing = [(os.path.basename(local), local, False)]
+    else:
+        try:
+            with os.scandir(local) as it:
+                listing = [(e.name, e.path, e.is_dir()) for e in it]
+        except OSError:
+            return None
+    data = []
+    for name, leaf, is_dir in listing:
+        if name.startswith(("_metadata", "_common_metadata")):
+            return None  # Spark infers from the summary first
+        # Spark's hidden-path rule (HadoopFSUtils.shouldFilterOutPathName)
+        if (
+            name.startswith(".")
+            or (name.startswith("_") and "=" not in name)
+            or name.endswith("._COPYING_")
+        ):
+            continue
+        if is_dir:
+            return None  # partition discovery is Spark's
+        data.append(leaf)
+    if not data:
+        return None
+    try:
+        # Spark reads the first leaf in path order
+        raw = (pq.read_metadata(min(data)).metadata or {}).get(SPARK_SCHEMA_KEY)
+    except (OSError, ValueError):
+        return None  # not a parquet file: Spark raises its own error
+    if raw is None:
+        return None
+    try:
+        return StructType.fromJson(json.loads(raw))
+    except (ValueError, KeyError, TypeError):
+        return None  # Spark's pre-JSON schema string: Spark parses it
+
+
 def fixed_width_export(
     df: DataFrame,
     path: str,

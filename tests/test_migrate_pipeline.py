@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -359,3 +361,210 @@ def test_where_condition_reaches_the_scan(spark, tmp_path):
     out, _ = build_feature_pipeline(spark.read.parquet(cfg.origin_path), cfg)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Not(EqualTo(status,x))" in plan
+
+
+# -- the origin schema comes from the footer Spark wrote -----------------------
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _typed_frame(spark):
+    """One column per type a migrated table carries, NULLs included,
+    plus a column with metadata."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("i", T.IntegerType(), False),
+            T.StructField("s", T.StringType()),
+            T.StructField("v", T.NullType()),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("ntz", T.TimestampNTZType()),
+            T.StructField("d", T.DateType()),
+            T.StructField("dec", T.DecimalType(38, 10)),
+            T.StructField(
+                "nested",
+                T.StructType(
+                    [
+                        T.StructField(
+                            "xs",
+                            T.ArrayType(T.MapType(T.StringType(), T.LongType())),
+                        )
+                    ]
+                ),
+            ),
+            T.StructField("bin", T.BinaryType()),
+            T.StructField("tiny", T.ByteType()),
+            T.StructField("small", T.ShortType()),
+            T.StructField("f", T.FloatType()),
+            T.StructField("tagged", T.LongType(), metadata={"comment": "pk"}),
+        ]
+    )
+    rows = [
+        (
+            1, "a", None, dt.datetime(2024, 1, 2, 3, 4, 5),
+            dt.datetime(2024, 1, 2, 3, 4, 5), dt.date(2024, 1, 2),
+            Decimal("12345.6789012345"), {"xs": [{"k": 1}, {}]},
+            b"\x00\x01", 7, 300, 1.5, 10,
+        ),
+        (2, None, None, None, None, None, None, None, None, None, None, None, None),
+    ]
+    return spark.createDataFrame(rows, schema)
+
+
+def test_plain_migration_runs_one_job(spark, tmp_path):
+    """A table Spark wrote is read with its footer's schema, so the
+    write is the only job a plain migration runs."""
+    src = str(tmp_path / "flat_src")
+    spark.range(200).selectExpr("id", "cast(id % 3 AS string) AS s").write.parquet(src)
+    cfg = MigrationConfig(origin_path=src, target_path=str(tmp_path / "flat_tgt"))
+    res, jobs = _jobs_in_group(spark, "plain-migrate", lambda: migrate(spark, cfg))
+    assert jobs == 1
+    assert (res.rows_read, res.rows_written) == (200, 200)
+
+
+def test_read_parquet_matches_inference(spark, tmp_path):
+    from cassandra_data_migration_spark.sources.files import (
+        _spark_footer_schema,
+        read_parquet,
+    )
+
+    src = str(tmp_path / "typed")
+    _typed_frame(spark).write.parquet(src)
+    assert _spark_footer_schema(spark, src) is not None
+    fast, jobs = _jobs_in_group(
+        spark, "read-parquet", lambda: read_parquet(spark, src)
+    )
+    assert jobs == 0
+    inferred = spark.read.parquet(src)
+    assert fast.schema == inferred.schema
+    assert fast.schema["tagged"].metadata == {"comment": "pk"}
+    assert sorted(fast.collect()) == sorted(inferred.collect())
+    # a single data file named directly reads the same way
+    part = read_parquet(spark, src).inputFiles()[0]
+    assert read_parquet(spark, part).schema == spark.read.parquet(part).schema
+
+
+def test_read_parquet_falls_back_to_inference(spark, tmp_path):
+    """Every input the driver cannot decide alone is Spark's to infer;
+    each still reads exactly like spark.read.parquet."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cassandra_data_migration_spark.sources.files import (
+        _spark_footer_schema,
+        read_parquet,
+    )
+
+    arrow = str(tmp_path / "arrow")
+    os.makedirs(arrow)
+    pq.write_table(
+        pa.table({"k": [1, 2], "tiny": pa.array([1, None], pa.int8())}),
+        f"{arrow}/part-0.parquet",
+    )
+    hive = str(tmp_path / "hive")
+    spark.range(6).selectExpr("id", "id % 2 AS p").write.partitionBy("p").parquet(hive)
+    summary = str(tmp_path / "summary")
+    spark.range(4).selectExpr("id", "cast(id AS string) AS s").write.parquet(summary)
+    first = sorted(f for f in os.listdir(summary) if f.startswith("part-"))[0]
+    pq.write_metadata(
+        pq.read_schema(f"{summary}/{first}"), f"{summary}/_common_metadata"
+    )
+    evolved = str(tmp_path / "evolved")
+    spark.range(3).write.parquet(evolved)
+    spark.range(3).selectExpr("id", "id * 2 AS late").write.mode("append").parquet(
+        evolved
+    )
+
+    def same(path):
+        assert _spark_footer_schema(spark, path) is None
+        fast, want = read_parquet(spark, path), spark.read.parquet(path)
+        assert fast.schema == want.schema
+        assert sorted(map(str, fast.collect())) == sorted(map(str, want.collect()))
+
+    same(arrow)
+    same(hive)
+    assert "p" in read_parquet(spark, hive).columns
+    same(summary)
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        same(evolved)
+        assert "late" in read_parquet(spark, evolved).columns
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
+
+
+def test_read_parquet_fails_like_spark(spark, tmp_path):
+    """An empty directory, a missing path and a hidden file named
+    directly (Spark lists no leaf for it) raise as Spark does."""
+    import shutil
+
+    from cassandra_data_migration_spark.sources.files import read_parquet
+
+    empty = tmp_path / "empty_dir"
+    empty.mkdir()
+    table = str(tmp_path / "spark_written")
+    spark.range(3).coalesce(1).write.parquet(table)
+    part = next(f for f in os.listdir(table) if f.startswith("part-"))
+    hidden = str(tmp_path / "_hidden.parquet")
+    shutil.copy(os.path.join(table, part), hidden)
+    for path in (str(empty), str(tmp_path / "missing"), hidden):
+        with pytest.raises(Exception) as want:
+            spark.read.parquet(path)
+        with pytest.raises(want.type):
+            read_parquet(spark, path)
+
+
+def test_validate_matches_null_keys(spark):
+    """A NULL key both sides hold is one matched row, not missing plus
+    extra, and a frame validated against itself passes."""
+    rows = spark.createDataFrame([(1, "a"), (None, "b")], "k int, v string")
+    copy = spark.createDataFrame([(1, "a"), (None, "b")], "k int, v string")
+    v = validate_table(rows, copy, ["k"])
+    assert (v.missing, v.mismatched, v.extra_in_target, v.status) == (
+        0, 0, 0, "PASS"
+    )
+    assert validate_table(rows, rows, ["k"]).passed
+    changed = spark.createDataFrame([(1, "a"), (None, "c")], "k int, v string")
+    assert validate_table(rows, changed, ["k"]).mismatched == 1
+
+
+def test_guardrail_without_columns_caps_every_column(spark, tmp_path):
+    """CDM's colSizeInKB names no columns: an oversized cell in any
+    migrated column is rejected and counted."""
+    from cassandra_data_migration_spark.plans.properties import (
+        config_from_properties,
+    )
+
+    src = str(tmp_path / "uncapped_src")
+    spark.createDataFrame(
+        [(1, "a", "b"), (2, "x" * 2000, "b"), (3, "a", "y" * 2000)],
+        "id int, note string, dropped string",
+    ).write.parquet(src)
+    cfg = config_from_properties(
+        {
+            "spark.cdm.guardrail.colSizeInKB": "1",
+            "spark.cdm.schema.origin.column.names.to.exclude": "dropped",
+        },
+        src,
+        str(tmp_path / "uncapped_tgt"),
+    )
+    assert cfg.guardrail_cols == []
+    res = migrate(spark, cfg)
+    written = spark.read.parquet(cfg.target_path)
+    # row 3's long cell is in an excluded column, which is not migrated
+    assert sorted(r.id for r in written.collect()) == [1, 3]
+    assert (res.rows_read, res.rows_written, res.guardrail_violations) == (
+        3, 2, 1
+    )
